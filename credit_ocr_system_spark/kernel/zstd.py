@@ -68,6 +68,7 @@ _OF_ACC = 5
 _MAX_LL_CODE = 35
 _MAX_ML_CODE = 52
 _MAX_OF_CODE = 31  # window caps real frames far below this
+_MAX_HUFF_BITS = 11  # literals Huffman code length cap (§4.2.1)
 
 
 def _highbit(v: int) -> int:
@@ -245,11 +246,17 @@ def _huff_from_weights(weights: list[int]):
     """(max_bits, table) — table maps a max_bits-wide prefix to
     (symbol, length). Weight w>0 means length max_bits+1-w; the last
     symbol's weight is implied to complete a power of two."""
+    # bound the table BEFORE sizing it: an FSE-coded weight can be
+    # any byte, and 1 << max_bits would then be unallocatable
+    if any(w > _MAX_HUFF_BITS for w in weights):
+        raise ZstdError(f"huffman weight exceeds {_MAX_HUFF_BITS}")
     total = sum((1 << (w - 1)) for w in weights if w > 0)
     if total == 0:
         raise ZstdError("empty huffman weights")
     # the implied last weight completes the NEXT power of two
     max_bits = _highbit(total) + 1
+    if max_bits > _MAX_HUFF_BITS:
+        raise ZstdError(f"huffman code length exceeds {_MAX_HUFF_BITS}")
     left = (1 << max_bits) - total
     if left <= 0 or left & (left - 1):
         raise ZstdError("huffman weights: invalid completion")
@@ -470,6 +477,8 @@ def _seq_table(fb_data: bytes, pos: int, mode: int, which: str,
         state[which] = (table, acc, None)
         return pos
     if mode == 1:   # RLE: one byte = the only symbol
+        if pos >= len(fb_data):
+            raise ZstdError(f"truncated {which} RLE sequence table")
         sym = fb_data[pos]
         if sym > max_sym:
             raise ZstdError(f"{which} RLE symbol out of range")
@@ -554,7 +563,7 @@ def _decode_sequences(rest: bytes, state: dict):
 
 
 def _execute(out: bytearray, literals: bytes, seqs, rep: list[int],
-             max_output: int) -> None:
+             max_output: int, frame_start: int) -> None:
     lit_pos = 0
     for ll, ml, of_val in seqs:
         if of_val > 3:
@@ -585,8 +594,8 @@ def _execute(out: bytearray, literals: bytes, seqs, rep: list[int],
             raise ZstdError("sequence literals overrun")
         out += literals[lit_pos:lit_pos + ll]
         lit_pos += ll
-        if offset > len(out):
-            raise ZstdError("match offset beyond window")
+        if offset > len(out) - frame_start:
+            raise ZstdError("match offset before frame start")
         if len(out) + ml > max_output:
             raise ZstdError("output exceeds max_output")
         start = len(out) - offset
@@ -615,6 +624,8 @@ def zstd_decompress(data: bytes, max_output: int = 1 << 26) -> bytes:
             if n - pos < 8:
                 raise ZstdError("truncated skippable frame")
             sz = int.from_bytes(data[pos + 4:pos + 8], "little")
+            if pos + 8 + sz > n:
+                raise ZstdError("truncated skippable frame")
             pos += 8 + sz
             continue
         if magic != MAGIC:
@@ -687,7 +698,8 @@ def zstd_decompress(data: bytes, max_output: int = 1 << 26) -> bytes:
                 pos += bsize
                 literals, used = _decode_literals(block, state)
                 seqs, _ = _decode_sequences(block[used:], state)
-                _execute(out, literals, seqs, rep, max_output)
+                _execute(out, literals, seqs, rep, max_output,
+                         frame_start)
             else:
                 raise ZstdError("reserved block type")
             if last:

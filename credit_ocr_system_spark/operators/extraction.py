@@ -129,7 +129,8 @@ def _arrow_schema() -> pa.Schema:
 
 def _extract_batches(
         batches: Iterator[pa.RecordBatch],
-        guard_off: bool | None = None) -> Iterator[pa.RecordBatch]:
+        guard_off: bool | None = None,
+        carry: tuple[str, ...] = ()) -> Iterator[pa.RecordBatch]:
     # Once-per-worker initialization (iterator-UDF prologue).
     from credit_ocr_system_spark.kernel.extract import extract_document
 
@@ -194,22 +195,37 @@ def _extract_batches(
                 f"of a batch — systemic regression, failing the task "
                 f"instead of emitting error rows. First error: "
                 f"{rows[0]['error']}")
-        yield pa.RecordBatch.from_pylist(rows, schema=schema)
+        out = pa.RecordBatch.from_pylist(rows, schema=schema)
+        if carry:
+            # carried input columns ride along zero-copy: one output
+            # row per input row, in input order
+            out = pa.RecordBatch.from_arrays(
+                out.columns + [batch.column(c) for c in carry],
+                names=out.schema.names + list(carry))
+        yield out
 
 
-def extract_pages(pages: DataFrame) -> DataFrame:
+def extract_pages(pages: DataFrame,
+                  carry: tuple[str, ...] = ()) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → extraction rows.
 
     Column pruning: only ``url`` and ``html`` cross the Arrow boundary
     — selecting first lets Parquet/Iceberg drop the other columns at
-    the scan.
+    the scan. ``carry`` names further input columns to pass through
+    to the output (appended after ``error``, types unchanged); they
+    never reach the kernel, so a consumer that needs one (the job's
+    WET/WAT ``warc_ts``) reads it here instead of re-joining the
+    input.
     """
     # capture the escape hatch on the DRIVER; the bool travels to
     # executors inside the serialized closure
     guard_off = _guard_disabled_by_env()
+    schema = EXTRACTED_SCHEMA + "".join(
+        f", `{c}` {pages.schema[c].dataType.simpleString()}"
+        for c in carry)
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        return _extract_batches(batches, guard_off=guard_off)
+        return _extract_batches(batches, guard_off=guard_off, carry=carry)
 
-    return pages.select("url", "html").mapInArrow(
-        run, schema=EXTRACTED_SCHEMA)
+    return pages.select("url", "html", *carry).mapInArrow(
+        run, schema=schema)

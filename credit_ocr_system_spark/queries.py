@@ -1708,9 +1708,9 @@ FROM ranked r JOIN quotas qu USING (source)
 WITH c AS (SELECT CAST(doc_id AS BIGINT) AS doc_id, source,
             CAST(len({_TOKS}) AS BIGINT) AS n_tokens FROM documents),
  o AS (SELECT doc_id, source, n_tokens,
-        SUM(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-                            ROWS UNBOUNDED PRECEDING) - n_tokens
-          AS start_off
+        CAST(SUM(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
+                                 ROWS UNBOUNDED PRECEDING) - n_tokens
+             AS BIGINT) AS start_off
        FROM c),
  s AS (SELECT doc_id, source, n_tokens, start_off,
         CAST(floor(start_off / {T.PACK_SEQ_LEN}) AS BIGINT)

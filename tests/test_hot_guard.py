@@ -14,13 +14,16 @@ Covers:
   in the sidecar flagged hot;
 * the sidecar snapshot is written for every run (clean batch =>
   empty snapshot, auditable absence of skew);
-* ``detect_hot=False`` opts out (no sidecar snapshot).
+* ``detect_hot=False`` opts out (no sidecar snapshot);
+* the guard over the extraction output (what the job runs) returns
+  exactly the rows of the guard over the input pages.
 """
 
 import os
 
 from pyspark.sql import functions as F
 
+from credit_ocr_system_spark.operators.extraction import extract_pages
 from credit_ocr_system_spark.plans.pipeline import (
     SnapshotSink,
     detect_hot_domains,
@@ -59,6 +62,8 @@ def test_pathological_corpus_trips_detector(spark, tmp_path):
     assert int(hot.loc[HOT_DOMAIN, "n_total"]) == stats["n_docs"]
     # the sidecar row is tied to this run
     assert (hot["run_id"] == stats["run_id"]).all()
+    # the job's count is the write's own observation of the sidecar
+    assert stats["n_hot_domains"] == len(hot)
 
 
 def test_sidecar_written_even_without_hot_rows(spark, tmp_path):
@@ -89,6 +94,17 @@ def test_detect_hot_false_skips_sidecar(spark, tmp_path):
     assert "n_hot_domains" not in stats
     side = SnapshotSink(os.path.join(out, "hot_keys"))
     assert side.read_committed(spark) is None
+
+
+def test_detect_hot_domains_over_extraction_equals_input(spark):
+    # The job runs the guard over its persisted extraction output: one
+    # row per input row, error rows included, so the verdicts must be
+    # exactly those of a run over the input pages.
+    pages = _pathological_pages(spark)
+    got = detect_hot_domains(extract_pages(pages)).collect()
+    want = detect_hot_domains(pages).collect()
+    assert sorted(got) == sorted(want)
+    assert any(r["key"] == HOT_DOMAIN and r["is_hot"] for r in got)
 
 
 def test_detect_hot_domains_standalone(spark):

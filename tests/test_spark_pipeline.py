@@ -187,6 +187,28 @@ def test_resume_is_idempotent(spark, tmp_path):
     assert (lineage.groupBy().sum("n_docs").collect()[0][0]) == 60
 
 
+def test_job_reads_input_once(spark, tmp_path):
+    """Every consumer (fields, lineage, hot-key guard, doc_status, WET,
+    WAT) reads the persisted extraction: the input is scanned, and a
+    WARC crawl decoded, exactly once per job."""
+    rows_read = spark.sparkContext.accumulator(0)
+
+    def tap(batches):
+        for batch in batches:
+            rows_read.add(batch.num_rows)
+            yield batch
+
+    pages = pages_df(spark, 40, partitions=2)
+    tapped = pages.mapInArrow(tap, pages.schema)
+    stats = run_extraction_job(
+        spark, tapped, str(tmp_path / "out"), num_partitions=2,
+        wet_dir=str(tmp_path / "wet"), wat_dir=str(tmp_path / "wat"),
+        detect_hot=True)
+    assert stats["n_docs"] == stats["n_wet"] == stats["n_wat"] == 40
+    assert "n_hot_domains" in stats
+    assert rows_read.value == 40
+
+
 def test_resume_filter_without_committed_is_passthrough(spark):
     pages = pages_df(spark, 10, partitions=2)
     assert resume_filter(pages, None) is pages

@@ -500,6 +500,13 @@ def test_extraction_job_emits_wet(spark, tmp_path):
                         glob="*.warc.wat.gz", types=("metadata",))
     assert meta.count() == 30
     assert meta.filter("mime = 'application/json'").count() == 30
+    # each record's WARC-Date is its own input row's fetch time
+    want = {r["url"]: r["warc_ts"]
+            for r in pages.select("url", "warc_ts").collect()}
+    for emitted in (back, meta):
+        got = {r["url"]: r["warc_ts"]
+               for r in emitted.select("url", "warc_ts").collect()}
+        assert got == want
     # resumed run: no new docs, no new wet/wat output
     r2 = run_extraction_job(spark, pages, out, num_partitions=2,
                             wet_dir=wet, wat_dir=wat)

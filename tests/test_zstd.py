@@ -163,3 +163,52 @@ def test_dictionary_frames_named():
     frame = (0xFD2FB528).to_bytes(4, "little") + bytes([0x21, 7])
     with pytest.raises(ZstdError, match="[Dd]ictionary"):
         zstd_decompress(frame + b"\x01\x00\x00")
+
+
+# ---------------------------------------------- hostile-input guards
+#
+# One crafted stream per guard. Each must fail with ZstdError only, so
+# a hostile ``Content-Encoding: zstd`` body becomes an empty payload
+# in the WARC envelope instead of killing the task.
+
+_MAGIC = (0xFD2FB528).to_bytes(4, "little")
+
+
+def _frame(block: bytes, content_size: int, btype: int = 2) -> bytes:
+    """Single-segment frame (1-byte FCS) holding one last block."""
+    bh = 1 | (btype << 1) | (len(block) << 3)
+    return (_MAGIC + bytes([0x20, content_size])
+            + bh.to_bytes(3, "little") + block)
+
+
+_RAW8 = _frame(b"abcdefgh", 8, btype=0)
+
+# Compressed literals (1 stream, 1 byte) whose Huffman weights are
+# FSE-coded: accuracy 5, symbols 0 and 200 at 16/32 each; the backward
+# stream decodes weight 200, which would size a 2**200-entry table.
+_HUGE_WEIGHT = _frame(
+    bytes.fromhex("1280051410e3" + "ff" * 16 + "f90380"), 1)
+# One sequence, literals-length table in RLE mode, block ends before
+# the RLE byte.
+_RLE_TRUNCATED = _frame(b"\x00\x01\x40", 0)
+# Second frame's only sequence (all-RLE tables, offset code 3 with
+# extra bits 0 → offset 5) reaches back into the first frame.
+_CROSS_FRAME_MATCH = _RAW8 + _frame(b"\x00\x01\x54\x00\x03\x00\x08", 3)
+# Skippable frame declaring 100 bytes but carrying 4.
+_SKIPPABLE_OVERRUN = (_RAW8 + bytes.fromhex("502a4d18")
+                      + (100).to_bytes(4, "little") + b"SKIP")
+
+
+@pytest.mark.parametrize("blob,msg", [
+    (_HUGE_WEIGHT, "huffman weight"),
+    (_RLE_TRUNCATED, "RLE sequence table"),
+    (_CROSS_FRAME_MATCH, "frame start"),
+    (_SKIPPABLE_OVERRUN, "skippable"),
+], ids=["huffman-weight", "rle-table", "cross-frame-offset",
+        "skippable-overrun"])
+def test_hostile_stream_guards(blob, msg):
+    from credit_ocr_system_spark.sources.warc import _content_decode
+
+    with pytest.raises(ZstdError, match=msg):
+        zstd_decompress(blob)
+    assert _content_decode(blob, b"zstd") == b""
